@@ -225,7 +225,11 @@ def psi(
     """Population Stability Index (stat_analyzer.py:467-509), fully
     distributive: shared bin edges from the global min/max of the union,
     floor-arithmetic bucketing (portable across engines), two groupBy
-    counts, tiny driver-side sum."""
+    counts, tiny driver-side sum.
+
+    A side with no non-NULL values has every bin at the ``eps`` floor,
+    which is what the oracle_sql() twin returns for it (its 0 / NULL
+    bin share is NULL, and greatest(NULL, eps) is eps)."""
     # NULLs are excluded: F.least(lit, NULL) returns the literal, so
     # unfiltered NULL rows would silently land in the TOP bin and
     # distort both distributions (review finding)
@@ -288,8 +292,8 @@ def psi(
     n_c, n_b = sum(cb.values()), sum(bb.values())
     val = 0.0
     for b in range(bins):
-        p = max(cb.get(b, 0) / n_c, eps)
-        q = max(bb.get(b, 0) / n_b, eps)
+        p = max(cb.get(b, 0) / n_c, eps) if n_c else eps
+        q = max(bb.get(b, 0) / n_b, eps) if n_b else eps
         val += (p - q) * math.log(p / q)
     return val
 

@@ -22,11 +22,12 @@ dynamic partition overwrite so replays are idempotent byte-for-byte.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_quality_checker_spark.functions.wordlists import LANGS
 from data_quality_checker_spark.plans.rules import RULE_NAMES, RuleConfig
 from data_quality_checker_spark.plans.scrub import with_scrub
 from data_quality_checker_spark.plans.udfs import langid_udf, perplexity_udf
@@ -176,7 +177,15 @@ def score_pages(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
 
         out = with_c4_clean(out.withColumn("text_raw", F.col("text")))
         out = out.withColumn("text", F.col("text_c4")).drop("text_c4")
-    out = with_rule_flags(out, cfg.rules)
+    rules = cfg.rules
+    if cfg.langid_impl == "udf":
+        # the UDF label decides the lang rule: the battery runs with
+        # every heuristic label allowed (its lang flag never fires),
+        # rule_lang is replaced below, and keep is gated on it after
+        # with_verdict, whose keep reads the stats, not the rule_*
+        # columns
+        rules = replace(rules, allowed_langs=(*LANGS, "und"))
+    out = with_rule_flags(out, rules)
     if cfg.langid_impl == "udf":
         if cfg.langid_model_path:
             from data_quality_checker_spark.plans.udfs import (
@@ -219,14 +228,11 @@ def score_pages(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
         )
 
         out = with_gopher_signals(out)
-    # self-contained keep unless the langid-UDF branch overrode the
-    # rule_lang column above (the bound form recomputes lang from
-    # cfg.rules and would ignore the override) — see with_verdict
-    out = with_verdict(
-        out,
-        cfg.rules,
-        self_contained_keep=(cfg.langid_impl != "udf"),
-    )
+    out = with_verdict(out, rules)
+    if cfg.langid_impl == "udf":
+        out = out.withColumn(
+            "keep", F.col("keep") & ~F.col(f"{RULE_PREFIX}lang")
+        )
     # the opt-in webtext stages gate keep WITHOUT entering the frozen
     # fired_rules contract (RULE_NAMES ordering is pinned three ways)
     if cfg.c4_line_clean:

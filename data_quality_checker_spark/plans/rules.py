@@ -5,19 +5,24 @@ file:line into /root/reference). A rule expression is TRUE when the
 document VIOLATES the rule (i.e. should be dropped for it) — the same
 polarity as the reference's "return violating rows" style.
 
-All rules are pure SQL expressions evaluated in one projection; the
-whole rule battery adds zero shuffles and zero Python.
+The battery has ONE form: ``page_stats`` evaluates every per-page
+statistic the nine content rules need into a single bound struct, and
+``rule_flags`` turns that struct (plus three length gates that read the
+text directly) into the 12 violation flags. plans/verdict.py evaluates
+the struct once per page and derives both the rule_* columns and
+``keep`` from it. Pure SQL expressions: zero shuffles, zero Python.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import lru_cache
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from data_quality_checker_spark.functions import text as X
+from data_quality_checker_spark.functions.litfast import sql_str
 from data_quality_checker_spark.functions.wordlists import (
     LANGS,
     QUALITY_STOPWORDS,
@@ -110,97 +115,6 @@ def word_alt_pattern(words: tuple[str, ...]) -> str:
     return r"(?:^|\s)" + emit(root) + r"(?=\s|$)"
 
 
-def stat_exprs_counts(
-    cfg: RuleConfig, text_col: str, lower_col: Column, ln: Column
-) -> dict[str, Column]:
-    """Stage-1 per-document counts — codegen'd regexp scans instead of
-    token-array lambdas: the array form allocates a String[] per doc
-    and runs 7+ interpreted higher-order passes, saturating memory
-    bandwidth at high core counts (measured 6x slower, and 0.63 vs
-    0.70+ strong-scaling efficiency, against the regex form). Only
-    repetition (needs token identity) and dup-lines (line identity)
-    still materialize arrays, each referenced exactly once.
-
-    (A combined-wordlist regexp_extract_all pass that the per-list
-    counts rescan was tried and REVERTED: predicate pushdown inlines
-    `keep` into the Filter condition with no cross-reference CSE, so
-    the shared extraction ran once per referencing count — 31s vs 16s
-    per 800k docs. Independent single-use scans are the stable form
-    under Catalyst's substitution rules.)"""
-    t = F.col(text_col)
-    tok = X.tokens(t)  # single use (array_distinct) — no re-eval
-    out: dict[str, Column] = {
-        # the language scores now live inside stat_exprs_ratios'
-        # bound single-extraction argmax (round-7) — see _lang there
-        "_wc": F.regexp_count(t, F.lit(r"\S+")),
-        # measured over the LOWERCASED text: the oracle/duck/rule_exprs
-        # mean-word-length all sum lowercased token lengths, and
-        # lower() can change length (e.g. U+0130 'İ' -> 'i̇', 2 chars)
-        "_nonws": F.length(F.regexp_replace(lower_col, r"\s", "")),
-        "_stopc": F.regexp_count(
-            lower_col, F.lit(word_alt_pattern(cfg.stopwords))
-        ),
-        # count of the negated class beats length(regexp_replace(...)):
-        # symbols are sparse, and counting skips the output-string
-        # allocation (measured 1.10s -> 0.40s per 800k docs)
-        "_symc": F.regexp_count(t, F.lit(r"[^\p{L}\p{N}\s]")),
-        "_udist": F.size(F.array_distinct(tok)),
-        "_dlf": F.when(
-            F.size(ln) > 0,
-            (F.size(ln) - F.size(F.array_distinct(ln))).cast("double")
-            / F.size(ln),
-        ),
-        "_tox": F.regexp_count(
-            lower_col, F.lit(word_alt_pattern(cfg.toxic_words))
-        ),
-    }
-    return out
-
-
-def _lang_union_extraction(lower_col: Column) -> Column:
-    """array<string> of every whitespace-bounded token of the lowered
-    text that belongs to ANY language stopword list — ONE trie-regex
-    pass over the union vocabulary (the match is wrapped in a capture
-    group so the leading separator is not captured)."""
-    union = tuple(sorted({w for lang in LANGS for w in STOPWORDS[lang]}))
-    pat = word_alt_pattern(union)
-    head, tail = r"(?:^|\s)", r"(?=\s|$)"
-    grouped = head + "(" + pat[len(head) : -len(tail)] + ")" + tail
-    return F.regexp_extract_all(lower_col, F.lit(grouped), 1)
-
-
-@lru_cache(maxsize=1)
-def _lang_count_map_sql() -> str:
-    """The constant membership map as ONE SQL ``map(...)`` literal
-    string. Building it from per-element ``F.lit`` Columns cost ~830
-    py4j round-trips PER QUERY CONSTRUCTION (measured: seconds of
-    driver-side build time billed to every small query that touches
-    the rule battery, round-7); one parsed expression string is
-    milliseconds and yields the identical foldable map."""
-    union = tuple(sorted({w for lang in LANGS for w in STOPWORDS[lang]}))
-    sets = [set(STOPWORDS[lang]) for lang in LANGS]
-
-    def esc(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    parts: list[str] = []
-    for w in union:
-        parts.append(esc(w))
-        parts.append(
-            "array("
-            + ",".join("1" if w in s else "0" for s in sets)
-            + ")"
-        )
-    return "map(" + ",".join(parts) + ")"
-
-
-def _lang_count_map() -> Column:
-    """Constant map: union token -> array<int> of per-language
-    membership (LANGS order). Foldable — Catalyst evaluates it once.
-    Parsed from a cached SQL literal (see _lang_count_map_sql)."""
-    return F.expr(_lang_count_map_sql())
-
-
 @lru_cache(maxsize=8)
 def _wordset_fold_sql(
     stopwords: tuple[str, ...], toxic: tuple[str, ...]
@@ -208,24 +122,19 @@ def _wordset_fold_sql(
     """(map_sql, grouped_extraction_pattern) over the union of the
     five language lists PLUS the config's quality-stopword and
     toxic-word lists; membership arrays are len(LANGS)+2 wide
-    ([..langs.., quality, toxic]). One extraction pass then folds
-    into all seven counts — used ONLY inside keep_fired_expr, where
-    the sharing is a HOF let-binding (safe under filter substitution,
-    unlike the projection-column sharing stat_exprs_counts documents
-    as reverted)."""
+    ([..langs.., quality, toxic]). One extraction pass then folds into
+    all seven counts. The map is ONE parsed SQL literal: building it
+    from per-element ``F.lit`` Columns cost ~830 py4j round-trips per
+    construction."""
     lists = [STOPWORDS[lang] for lang in LANGS] + [
         tuple(stopwords),
         tuple(toxic),
     ]
     union = tuple(sorted({w for ws in lists for w in ws}))
     sets = [set(ws) for ws in lists]
-
-    def esc(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
     parts: list[str] = []
     for w in union:
-        parts.append(esc(w))
+        parts.append(sql_str(w))
         parts.append(
             "array("
             + ",".join("1" if w in s else "0" for s in sets)
@@ -237,35 +146,10 @@ def _wordset_fold_sql(
     return "map(" + ",".join(parts) + ")", grouped
 
 
-def _lang_counts_expr(lower_col: Column) -> Column:
-    """array<int> of the five per-language stopword counts from ONE
-    union-vocabulary extraction: the extracted tokens (a few dozen per
-    document) fold through a constant membership map into the five
-    counts, which are bit-identical to five separate regexp_count
-    scans (pinned by parity against the scan form on the 800k bench
-    corpus and by the langid oracles). The extraction is BOUND
-    (functions/text.bind_once), so however often the surrounding
-    expression is inlined into a pushed-down filter, it evaluates
-    once per row."""
-    cmap = _lang_count_map()
-    zero = F.array_repeat(F.lit(0), len(LANGS))
-    return X.bind_once(
-        _lang_union_extraction(lower_col),
-        lambda arr: F.aggregate(
-            arr,
-            zero,
-            lambda acc, tk: F.zip_with(
-                acc,
-                F.element_at(cmap, tk),
-                lambda a, b: a + b,
-            ),
-        ),
-    )
-
-
-def _lang_argmax_from_counts(counts: Column) -> Column:
-    """Deterministic argmax (LANGS order tie-break, 'und' when every
-    count is zero) over a five-int counts array."""
+def lang_argmax(counts: Column) -> Column:
+    """Deterministic language argmax (LANGS order tie-break, 'und'
+    when every count is zero) over the first len(LANGS) entries of a
+    page_stats ``wsc`` counts array."""
     sc = [counts[i] for i in range(len(LANGS))]
     best = F.greatest(*sc)
     e = F.lit("und")
@@ -276,276 +160,134 @@ def _lang_argmax_from_counts(counts: Column) -> Column:
     return e
 
 
-def lang_argmax_expr(lower_col: Column) -> Column:
-    """Language argmax over the five stopword counts, computed from a
-    SINGLE union-vocabulary extraction instead of five separate
-    wordlist scans (round-7): measured 4.4 s -> 2.9 s for the forced
-    argmax filter over 800k docs. See _lang_counts_expr /
-    _lang_argmax_from_counts (split so keep_fired_expr can reuse the
-    counts array as a struct field)."""
-    return X.bind_once(
-        _lang_counts_expr(lower_col), _lang_argmax_from_counts
-    )
+def page_stats(cfg: RuleConfig, text_col: str = "text") -> Column:
+    """Every statistic the nine content rules read, as ONE struct whose
+    inputs are HOF let-bindings (functions/text.bind_once), so each
+    piece of regex work runs once per page however often the
+    optimizer inlines the struct:
 
+    - ``wc`` / ``nonws`` / ``udist`` from one token array of the
+      lowered text. The count of \\S+ runs equals the number of
+      non-empty split tokens (same Java \\s class; lowercasing never
+      adds or removes whitespace). Non-ws chars of the LOWERED text
+      equal the summed token lengths, which is what the oracle and
+      DuckDB twins measure (lower() can change length: 'İ' -> 'i̇').
+    - ``wsc``: one extraction over the union vocabulary of the five
+      language lists plus the quality-stopword and toxic-word lists,
+      folded through a constant membership map into len(LANGS)+2
+      counts ([..langs.., quality, toxic]). Each count equals its
+      single-list regexp_count: any match spans exactly a whole
+      whitespace-bounded member token (see word_alt_pattern).
+    - ``symc``: the symbol count. Spark rewrites regexp_count to
+      size(regexp_extract_all(...)), so it materializes the match
+      array; symbols are sparse, so the array stays small.
+    - ``dlf``: the duplicate-line fraction (NULL without lines).
 
-def stat_exprs_ratios(cfg: RuleConfig, text_col: str) -> dict[str, Column]:
-    """Stage-2 ratios + language argmax over the stage-1 count columns
-    (cheap arithmetic; collapses into one codegen stage)."""
+    Fields are NULL-propagating for NULL text; rule_flags guards every
+    content rule with ``text IS NOT NULL``."""
     t = F.col(text_col)
-    wc = F.col("_wc")
-    # single-extraction argmax over the _lower helper column — the
-    # five per-language scans collapsed into one union-trie pass; see
-    # lang_argmax_expr (round-7)
-    lang_expr = lang_argmax_expr(F.col("_lower"))
-    return {
-        "_mwl": F.when(wc > 0, F.col("_nonws").cast("double") / wc),
-        "_stopr": F.when(wc > 0, F.col("_stopc").cast("double") / wc),
-        "_symr": F.when(
-            F.length(t) > 0, F.col("_symc").cast("double") / F.length(t)
-        ),
-        "_rep": F.when(
-            wc > 0, F.lit(1.0) - F.col("_udist").cast("double") / wc
-        ),
-        "_lang": lang_expr,
-    }
-
-
-
-def rule_exprs_from_stats(
-    cfg: RuleConfig, text_col: str = "text"
-) -> dict[str, Column]:
-    """Violation flags as cheap comparisons over the precomputed stat
-    columns emitted by stat_exprs (same names/order as rule_exprs)."""
-    t = F.col(text_col)
-    wc = F.col("_wc")
-    return {
-        # whitespace-ONLY docs are empty: rlike stops at the first
-        # non-ws char (cheap for real docs); F.trim strips spaces
-        # only, so '\n'/'\r'/'\t'-only docs would slip through
-        "empty": t.isNull() | ~t.rlike(r"\S"),
-        "too_short": t.isNotNull() & (F.length(t) < cfg.min_chars),
-        "too_long": t.isNotNull() & (F.length(t) > cfg.max_chars),
-        "too_few_words": t.isNotNull() & (wc > 0) & (wc < cfg.min_words),
-        "too_many_words": t.isNotNull() & (wc > cfg.max_words),
-        "mean_word_len": t.isNotNull()
-        & (
-            (F.col("_mwl") < cfg.min_mean_word_len)
-            | (F.col("_mwl") > cfg.max_mean_word_len)
-        ),
-        "low_stopword": t.isNotNull()
-        & (F.col("_stopr") < cfg.min_stopword_ratio),
-        "high_symbol": t.isNotNull()
-        & (F.col("_symr") > cfg.max_symbol_ratio),
-        "high_repetition": t.isNotNull()
-        & (F.col("_rep") > cfg.max_repetition),
-        "dup_lines": t.isNotNull()
-        & (F.col("_dlf") > cfg.max_dup_line_fraction),
-        "lang": t.isNotNull() & ~F.col("_lang").isin(*cfg.allowed_langs),
-        "toxicity": t.isNotNull() & (F.col("_tox") > 0),
-    }
-
-
-@lru_cache(maxsize=32)
-def keep_fired_expr(cfg: RuleConfig, text_col: str = "text") -> Column:
-    """'Any rule fired' as ONE self-contained boolean whose per-doc
-    stats are HOF let-bindings (functions/text.bind_once) — each stat
-    evaluates EXACTLY ONCE per row no matter how the optimizer inlines
-    the expression.
-
-    lru_cached (round-7): the expression is a pure function of the
-    frozen (cfg, text_col) pair, but BUILDING it costs ~0.3 s of py4j
-    round-trips — billed to every score_pages/with_verdict call, i.e.
-    every timed pipeline run. Column trees are plan-independent and
-    reusable across DataFrames/sessions within one JVM gateway.
-
-    Why this exists (round-7): a ``filter(keep)``-only consumer (the
-    pipeline's bench/run shape) prunes fired_rules, CollapseProject
-    folds the stat/ratio/flag projections away, and PushDownPredicates
-    substitutes the whole battery into the Filter condition — and
-    FilterExec, unlike ProjectExec, performs NO common-subexpression
-    elimination, so every stat re-evaluates once per referencing flag
-    (_wc alone is referenced by five flags). Measured on the 800k-doc
-    bench corpus: 15 regexp passes per surviving row, 6.1 s for the
-    battery, vs 0.1 s for the same stats evaluated once each. The
-    bound form pays the whole battery for every doc that passes the
-    three cheap length gates (no per-flag short-circuit skip), which
-    the measurement above prices at well under the duplication it
-    removes.
-
-    VALUE-IDENTICAL to ``or(rule_exprs_from_stats(cfg))`` over
-    coalesced flags — same stats, same guards, same NULL semantics
-    (pinned by tests/test_r07_optimizations and the pipeline F1/golden
-    gates). Callers that OVERRIDE a flag column (the langid-UDF
-    pipeline branch) must NOT use this form — it recomputes the lang
-    rule from ``cfg``."""
-    t = F.col(text_col)
-    ln_t = F.length(t)
-    # cheap gates first — evaluation order matches _KEEP_EVAL_ORDER's
-    # prefix (empty, too_short, too_long); codegen's boolean OR
-    # short-circuits, so docs dropped here never run the battery
-    cheap = (
-        t.isNull()
-        | ~t.rlike(r"\S")
-        | (ln_t < cfg.min_chars)
-        | (ln_t > cfg.max_chars)
-    )
-
-    n_langs = len(LANGS)
-
-    def _flags_from(s: Column) -> Column:
-        wc = s["wc"]
-        mwl = F.when(wc > 0, s["nonws"].cast("double") / wc)
-        stopr = F.when(
-            wc > 0, s["wsc"][n_langs].cast("double") / wc
-        )
-        symr = F.when(ln_t > 0, s["symc"].cast("double") / ln_t)
-        rep = F.when(
-            wc > 0, F.lit(1.0) - s["udist"].cast("double") / wc
-        )
-        # the argmax reads indices 0..len(LANGS)-1 of the 7-wide array
-        lang = _lang_argmax_from_counts(s["wsc"])
-        fb = F.lit(False)
-        # remaining _KEEP_EVAL_ORDER: too_few/too_many words,
-        # mean_word_len, high_symbol, high_repetition, dup_lines,
-        # low_stopword, toxicity, lang
-        return (
-            F.coalesce((wc > 0) & (wc < cfg.min_words), fb)
-            | F.coalesce(wc > cfg.max_words, fb)
-            | F.coalesce(
-                (mwl < cfg.min_mean_word_len)
-                | (mwl > cfg.max_mean_word_len),
-                fb,
-            )
-            | F.coalesce(symr > cfg.max_symbol_ratio, fb)
-            | F.coalesce(rep > cfg.max_repetition, fb)
-            | F.coalesce(s["dlf"] > cfg.max_dup_line_fraction, fb)
-            | F.coalesce(stopr < cfg.min_stopword_ratio, fb)
-            | F.coalesce(s["wsc"][n_langs + 1] > 0, fb)
-            | F.coalesce(~lang.isin(*cfg.allowed_langs), fb)
-        )
-
     map_sql, ext_pat = _wordset_fold_sql(cfg.stopwords, cfg.toxic_words)
+    zero = F.array_repeat(F.lit(0), len(LANGS) + 2)
 
-    def _expensive(lo: Column) -> Column:
+    def _from_lower(lo: Column) -> Column:
         cmap = F.expr(map_sql)
-        zero = F.array_repeat(F.lit(0), n_langs + 2)
-        # ONE extraction over the extended union (langs + quality +
-        # toxic) folds into all seven wordlist counts — replaces the
-        # separate quality-stopword and toxic-word scans (each count
-        # identical to its regexp_count twin: any match spans exactly
-        # a whole whitespace-bounded member token, see
-        # word_alt_pattern)
-        wsc = X.bind_once(
+        wsc = F.aggregate(
             F.regexp_extract_all(lo, F.lit(ext_pat), 1),
-            lambda arr: F.aggregate(
-                arr,
-                zero,
-                lambda acc, tk: F.zip_with(
-                    acc,
-                    F.element_at(cmap, tk),
-                    lambda a, b: a + b,
-                ),
+            zero,
+            lambda acc, tk: F.zip_with(
+                acc, F.element_at(cmap, tk), lambda a, b: a + b
             ),
         )
-        def _stats(toks: Column) -> Column:
-            # wc / nonws / udist all derive from ONE bound token
-            # array instead of three separate regex passes:
-            # - count of \S+ runs == number of non-empty split
-            #   tokens (identical Java \s class on both sides, and
-            #   lowercasing never adds/removes whitespace);
-            # - non-ws chars of the lowered text == sum of lowered
-            #   token lengths (tokens partition the non-ws chars);
-            # - the distinct count used tokens already.
-            return F.struct(
+        dlf = X.bind_once(
+            X.lines(t),
+            lambda lns: F.when(
+                F.size(lns) > 0,
+                (F.size(lns) - F.size(F.array_distinct(lns))).cast(
+                    "double"
+                )
+                / F.size(lns),
+            ),
+        )
+        return X.bind_once(
+            X.tokens(lo, lowercase=False),
+            lambda toks: F.struct(
                 F.size(toks).alias("wc"),
                 F.aggregate(
                     F.transform(toks, F.length),
                     F.lit(0).cast("long"),
                     lambda a, x: a + x,
                 ).alias("nonws"),
-                F.regexp_count(
-                    t, F.lit(r"[^\p{L}\p{N}\s]")
-                ).alias("symc"),
                 F.size(F.array_distinct(toks)).alias("udist"),
-                X.bind_once(
-                    X.lines(t),
-                    lambda lns: F.when(
-                        F.size(lns) > 0,
-                        (
-                            F.size(lns) - F.size(F.array_distinct(lns))
-                        ).cast("double")
-                        / F.size(lns),
-                    ),
-                ).alias("dlf"),
+                F.regexp_count(t, F.lit(r"[^\p{L}\p{N}\s]")).alias(
+                    "symc"
+                ),
+                dlf.alias("dlf"),
                 wsc.alias("wsc"),
-            )
-
-        return X.bind_once(
-            X.tokens(lo, lowercase=False),
-            lambda toks: X.bind_once(_stats(toks), _flags_from),
+            ),
         )
 
-    return cheap | F.coalesce(
-        X.bind_once(F.lower(t), _expensive), F.lit(False)
-    )
+    return X.bind_once(F.lower(t), _from_lower)
 
 
-def rule_exprs(cfg: RuleConfig, text_col: str = "text") -> dict[str, Column]:
-    """name -> violation Column, self-contained (tokenizes inline; fine
-    for one-off use — the pipeline path goes through verdict.
-    with_rule_flags, which shares one tokenization across all rules).
-    Ordered dict; order defines the fired_rules array ordering
-    everywhere (Spark, oracle, SQL)."""
-    t = F.col(text_col)
-    wc = X.word_count(t)
+# the three rules that read only the text's length/emptiness: keep
+# tests them before it evaluates page_stats
+GATE_RULES: tuple[str, ...] = ("empty", "too_short", "too_long")
+
+
+def rule_flags(
+    cfg: RuleConfig, t: Column, s: Column
+) -> dict[str, Column]:
+    """name -> violation Column in RULE_NAMES order, over the text
+    column ``t`` and its page_stats struct ``s`` (a column or a bound
+    lambda variable). Flags may be NULL; callers coalesce to false."""
+    n = len(LANGS)
+    ln = F.length(t)
+    wc = s["wc"]
+    mwl = F.when(wc > 0, s["nonws"].cast("double") / wc)
     return {
-        # dq_checker.py:291-304 (null %) + empty-string gate
+        # dq_checker.py:291-304 (null %) + empty-string gate;
         # whitespace-ONLY docs are empty: rlike stops at the first
         # non-ws char (cheap for real docs); F.trim strips spaces
         # only, so '\n'/'\r'/'\t'-only docs would slip through
         "empty": t.isNull() | ~t.rlike(r"\S"),
         # nlp_analyzer.py:87-88; dq_checker.py:619-634
-        "too_short": t.isNotNull() & (F.length(t) < cfg.min_chars),
-        "too_long": t.isNotNull() & (F.length(t) > cfg.max_chars),
+        "too_short": t.isNotNull() & (ln < cfg.min_chars),
+        "too_long": t.isNotNull() & (ln > cfg.max_chars),
         "too_few_words": t.isNotNull() & (wc > 0) & (wc < cfg.min_words),
         "too_many_words": t.isNotNull() & (wc > cfg.max_words),
         # nlp_analyzer.py:99-122
         "mean_word_len": t.isNotNull()
-        & (
-            (X.mean_word_length(t) < cfg.min_mean_word_len)
-            | (X.mean_word_length(t) > cfg.max_mean_word_len)
-        ),
+        & ((mwl < cfg.min_mean_word_len) | (mwl > cfg.max_mean_word_len)),
         # nlp_analyzer.py:927-929
         "low_stopword": t.isNotNull()
-        & (X.stopword_ratio(t, cfg.stopwords) < cfg.min_stopword_ratio),
+        & (
+            F.when(wc > 0, s["wsc"][n].cast("double") / wc)
+            < cfg.min_stopword_ratio
+        ),
         # dq_checker.py:543-557 reframed as symbol density
         "high_symbol": t.isNotNull()
-        & (X.symbol_ratio(t) > cfg.max_symbol_ratio),
+        & (
+            F.when(ln > 0, s["symc"].cast("double") / ln)
+            > cfg.max_symbol_ratio
+        ),
         # nlp_analyzer.py:852-885
         "high_repetition": t.isNotNull()
-        & (X.repetition_ratio(t) > cfg.max_repetition),
+        & (
+            F.when(wc > 0, F.lit(1.0) - s["udist"].cast("double") / wc)
+            > cfg.max_repetition
+        ),
         # dq_checker.py:985-998 applied within document
-        "dup_lines": t.isNotNull()
-        & (X.dup_line_fraction(t) > cfg.max_dup_line_fraction),
+        "dup_lines": t.isNotNull() & (s["dlf"] > cfg.max_dup_line_fraction),
         # nlp_analyzer.py:887-900 langid; heuristic stand-in for fastText
         "lang": t.isNotNull()
-        & ~X.langid_best(t).isin(*cfg.allowed_langs),
+        & ~lang_argmax(s["wsc"]).isin(*cfg.allowed_langs),
         # dq_checker.py:222-241 membership check as a deny-list
-        "toxicity": t.isNotNull()
-        & (
-            F.size(
-                F.array_intersect(
-                    X.tokens(t),
-                    F.array(*[F.lit(w) for w in cfg.toxic_words]),
-                )
-            )
-            > 0
-        ),
+        "toxicity": t.isNotNull() & (s["wsc"][n + 1] > 0),
     }
 
 
 # static (Column construction needs a live SparkSession; keep importable
-# without one). Must stay in sync with rule_exprs — pinned by a test.
+# without one). Must stay in sync with rule_flags — pinned by a test.
 RULE_NAMES: tuple[str, ...] = (
     "empty",
     "too_short",

@@ -84,8 +84,8 @@ def scrub_count_exprs(
     out: dict[str, Column] = {}
     c: Column = F.col(text_col)
     for name, pat, repl in patterns:
-        # regexp_count: same value as size(regexp_extract_all) without
-        # materializing the match array (allocation-free codegen scan)
+        # regexp_count: Spark rewrites it to
+        # size(regexp_extract_all(...)), so the match array IS built
         out[name] = F.when(c.isNull(), F.lit(0)).otherwise(
             F.regexp_count(c, F.lit(pat))
         )
@@ -156,30 +156,33 @@ def luhn_valid_python(text: str | None) -> int:
 
 
 def with_scrub(df, text_col: str = "text"):
-    """Staged scrub: each intermediate replacement is a materialized,
-    multi-referenced column (CollapseProject keeps it), so the chain
-    runs each regexp_replace exactly once and the per-kind counts read
-    the staged text instead of rebuilding the chain (3 fewer full-doc
-    regex passes than independent scrub_expr + scrub_count_exprs).
-    Adds scrub_<kind> counts + scrubbed_text."""
-    from pyspark.sql import functions as F
-
+    """Staged scrub: adds scrub_<kind> counts + scrubbed_text. Each
+    count and each intermediate text is a materialized, multi-referenced
+    column (CollapseProject keeps it), so every regex runs at most once
+    per page. A pattern's regexp_replace runs only when its count is
+    > 0: with no match the replace is the identity. The email count
+    itself runs only when the text contains '@', without which the
+    email pattern cannot match. Counts are taken on the progressively
+    scrubbed text, so they compose with the replacement order."""
     cur = F.col(text_col)
     out = df
     stage_names = []
     for i, (name, pat, repl) in enumerate(SCRUB_PATTERNS):
-        out = out.withColumn(
-            f"scrub_{name}",
-            F.when(cur.isNull(), F.lit(0)).otherwise(
-                F.regexp_count(cur, F.lit(pat))
-            ),
-        )
+        count = F.regexp_count(cur, F.lit(pat))
+        if name == "email":  # the pattern's one literal '@'
+            count = F.when(F.instr(cur, "@") > 0, count)
+        out = out.withColumn(f"scrub_{name}", F.coalesce(count, F.lit(0)))
         stage = (
             "scrubbed_text"
             if i == len(SCRUB_PATTERNS) - 1
             else f"_scrub{i}"
         )
-        out = out.withColumn(stage, F.regexp_replace(cur, pat, repl))
+        out = out.withColumn(
+            stage,
+            F.when(
+                F.col(f"scrub_{name}") > 0, F.regexp_replace(cur, pat, repl)
+            ).otherwise(cur),
+        )
         if stage != "scrubbed_text":
             stage_names.append(stage)
         cur = F.col(stage)

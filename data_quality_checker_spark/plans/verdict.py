@@ -1,150 +1,116 @@
-"""Verdict assembly: rule flags -> fired_rules array -> keep boolean.
+"""Verdict assembly: page stats -> rule_* flags -> fired_rules + keep.
 
-Per-rule boolean columns are retained (null-safe, coalesced to false)
-so the metrics stage can aggregate rule-level drop counts without
-re-evaluating rules (generalizes generate_report, dq_checker.py:33-45).
+The battery is evaluated once per page. with_rule_flags puts the
+rules.page_stats struct in the hidden ``_rule_stats`` column and
+derives the 12 rule_* flags from it; with_verdict builds fired_rules
+from the flags and ``keep`` from the same struct, then drops it. The
+per-rule boolean columns (null-safe, coalesced to false) stay, so the
+metrics stage aggregates rule-level drop counts without re-evaluating
+rules (generalizes generate_report, dq_checker.py:33-45).
 """
 
 from __future__ import annotations
 
-from functools import lru_cache
+from functools import lru_cache, reduce, wraps
+from operator import or_
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_quality_checker_spark.functions.text import bind_once
 from data_quality_checker_spark.plans.rules import (
+    GATE_RULES,
     RULE_NAMES,
     RuleConfig,
-    rule_exprs,
+    page_stats,
+    rule_flags,
 )
 
 RULE_PREFIX = "rule_"
+STATS_COL = "_rule_stats"
 
 
-@lru_cache(maxsize=32)
-def _battery_exprs(cfg: RuleConfig, text_col: str):
-    """Cached construction of the battery's Column dicts (round-7):
-    the expressions are a pure function of the frozen (cfg, text_col)
-    pair, but building them costs ~0.4 s of py4j round-trips per call
-    — billed to every with_rule_flags invocation (each timed pipeline
-    run, every verdict query). Column trees are plan-independent and
-    reusable across DataFrames/sessions within one JVM gateway.
-    Returns item tuples (hashable, immutable cache value); callers
-    rebuild dicts."""
-    from data_quality_checker_spark.functions import text as X
-    from data_quality_checker_spark.plans.rules import (
-        rule_exprs_from_stats,
-        stat_exprs_counts,
-        stat_exprs_ratios,
+def _per_gateway(build):
+    """lru_cache for Column builders, keyed on the live py4j gateway as
+    well as the arguments. Building the battery costs hundreds of py4j
+    round-trips, so it is built once per (cfg, text_col); but a Column
+    is a JVM handle, and one cached from a gateway that was torn down
+    and relaunched in-process would fail with opaque py4j errors."""
+    cached = lru_cache(maxsize=32)(lambda gateway, *args: build(*args))
+
+    @wraps(build)
+    def builder(*args):
+        return cached(SparkContext._gateway, *args)
+
+    builder.cache_clear = cached.cache_clear
+    return builder
+
+
+@_per_gateway
+def _battery(cfg: RuleConfig, text_col: str):
+    """(stats, rule_* columns, fired_rules, keep)."""
+    t = F.col(text_col)
+    flags = rule_flags(cfg, t, F.col(STATS_COL))
+    rule_cols = tuple(
+        (f"{RULE_PREFIX}{name}", F.coalesce(e, F.lit(False)))
+        for name, e in flags.items()
+    )
+    fired = F.array_compact(
+        F.array(
+            *[F.when(F.col(f"{RULE_PREFIX}{n}"), F.lit(n)) for n in RULE_NAMES]
+        )
     )
 
-    helpers = (
-        ("_lower", F.lower(F.col(text_col))),
-        ("_lines", X.lines(text_col)),
+    def content_fired(s: Column) -> Column:
+        return reduce(
+            or_,
+            [
+                F.coalesce(e, F.lit(False))
+                for name, e in rule_flags(cfg, t, s).items()
+                if name not in GATE_RULES
+            ],
+        )
+
+    # the gates first: codegen's OR short-circuits, so under a
+    # filter(keep) a page they drop never evaluates the stats. The
+    # struct is read through ONE bind_once reference, so when the
+    # rule_* columns are pruned it inlines into keep (and any pushed
+    # filter) exactly once instead of once per flag: FilterExec has no
+    # common-subexpression elimination.
+    keep = ~(
+        reduce(or_, [flags[n] for n in GATE_RULES])
+        | F.coalesce(bind_once(F.col(STATS_COL), content_fired), F.lit(False))
     )
-    counts = stat_exprs_counts(
-        cfg, text_col, F.col("_lower"), F.col("_lines")
-    )
-    ratios = stat_exprs_ratios(cfg, text_col)
-    flags = tuple(
-        (f"{RULE_PREFIX}{name}", F.coalesce(expr, F.lit(False)))
-        for name, expr in rule_exprs_from_stats(cfg, text_col).items()
-    )
-    return helpers, tuple(counts.items()), tuple(ratios.items()), flags
+    return page_stats(cfg, text_col), rule_cols, fired, keep
 
 
 def with_rule_flags(
     df: DataFrame, cfg: RuleConfig | None = None, text_col: str = "text"
 ) -> DataFrame:
-    """Staged plan: (1) lower/line-split once (multi-referenced, so
-    CollapseProject keeps them materialized), (2) per-doc counts as
-    codegen'd regexp scans, (3) cheap ratios + language argmax,
-    (4) flag comparisons. The whole battery reads each document a
-    bounded number of times with no per-rule token-array allocation
-    (~6x over the naive per-rule form; see rules.stat_exprs_counts)."""
-    cfg = cfg or RuleConfig()
-    helpers, counts, ratios, flags = _battery_exprs(cfg, text_col)
-    d = df.withColumns(dict(helpers))
-    d = d.withColumns(dict(counts))
-    d = d.withColumns(dict(ratios))
-    # derive the drop list from the stat dicts (rules.py owns the
-    # names): a new stat added there must not silently leak an
-    # underscore helper column into every scored output / sink schema
-    helper_cols = [
-        "_lower",
-        "_lines",
-        *(k for k, _ in counts),
-        *(k for k, _ in ratios),
-    ]
-    return d.withColumns(dict(flags)).drop(*helper_cols)
-
-
-# keep's OR-chain evaluation order: cheapest rules first so codegen's
-# short-circuit skips the expensive wordlist/langid scans for any doc
-# already dropped by a length/word-count gate. Evaluation order only —
-# fired_rules stays in RULE_NAMES order (pinned by the oracles).
-# Measured 13.7s -> 7.0s for filter(keep) over 800k docs.
-_KEEP_EVAL_ORDER = (
-    "empty", "too_short", "too_long", "too_few_words", "too_many_words",
-    "mean_word_len", "high_symbol", "high_repetition", "dup_lines",
-    "low_stopword", "toxicity", "lang",
-)
-
-
-@lru_cache(maxsize=1)
-def _fired_and_or():
-    """Cached (fired_rules array, flag OR-chain) Columns — pure
-    functions of the fixed RULE_NAMES/_KEEP_EVAL_ORDER constants
-    (round-7 construction-cost rule, see _battery_exprs)."""
-    names = list(RULE_NAMES)
-    assert set(_KEEP_EVAL_ORDER) == set(names)
-    fired = F.array_compact(
-        F.array(
-            *[
-                F.when(F.col(f"{RULE_PREFIX}{n}"), F.lit(n))
-                for n in names
-            ]
-        )
-    )
-    flag_or = F.lit(False)
-    for n in _KEEP_EVAL_ORDER:
-        flag_or = flag_or | F.col(f"{RULE_PREFIX}{n}")
-    return fired, flag_or
+    """Adds the 12 rule_* flags (RULE_NAMES order), all read from one
+    page_stats struct evaluated once per page. The struct stays in
+    ``_rule_stats`` for with_verdict, which drops it."""
+    stats, rule_cols, *_ = _battery(cfg or RuleConfig(), text_col)
+    return df.withColumn(STATS_COL, stats).withColumns(dict(rule_cols))
 
 
 def with_verdict(
-    df: DataFrame,
-    cfg: RuleConfig | None = None,
-    text_col: str = "text",
-    self_contained_keep: bool = False,
+    df: DataFrame, cfg: RuleConfig | None = None, text_col: str = "text"
 ) -> DataFrame:
-    """Adds fired_rules (array<string>, rule order) and keep (bool).
+    """Adds fired_rules (array<string>, rule order) and keep (bool), and
+    drops ``_rule_stats``. ``cfg`` must be the one given to
+    with_rule_flags.
 
-    keep is a short-circuiting OR-chain over the flags rather than
-    size(fired_rules) == 0 (same value: flags are coalesced non-null):
-    a consumer that filters on keep without reading fired_rules gets
-    the array construction pruned AND early-out evaluation.
-
-    ``self_contained_keep`` (round-7) builds keep from
-    rules.keep_fired_expr instead of the flag columns: one expression
-    whose stats are HOF let-bindings, so a filter(keep)-only consumer
-    — where the optimizer substitutes the whole battery into a Filter
-    condition that has no common-subexpression elimination — pays each
-    stat scan once per row instead of once per referencing flag
-    (measured 6.1 s -> 0.1 s battery per 800k docs). Same value as the
-    flag OR (pinned by test + the F1 golden gate). ONLY valid when no
-    rule_* column has been overridden after with_rule_flags (e.g. the
-    langid-UDF pipeline branch must keep the column form)."""
-    cfg = cfg or RuleConfig()
-    fired, flag_or = _fired_and_or()
-    if self_contained_keep:
-        from data_quality_checker_spark.plans.rules import (
-            keep_fired_expr,
-        )
-
-        any_fired = keep_fired_expr(cfg, text_col)
-    else:
-        any_fired = flag_or
-    return df.withColumn("fired_rules", fired).withColumn(
-        "keep", ~any_fired
+    keep equals size(fired_rules) == 0 but reads the stats struct, not
+    the flags, so a filter(keep)-only consumer prunes fired_rules and
+    every rule_* column and evaluates the battery once, only for pages
+    past the three length gates. A caller that overrides a rule_*
+    column after with_rule_flags gates keep on it itself, as the
+    langid-UDF pipeline branch does."""
+    _, _, fired, keep = _battery(cfg or RuleConfig(), text_col)
+    return (
+        df.withColumn("fired_rules", fired)
+        .withColumn("keep", keep)
+        .drop(STATS_COL)
     )

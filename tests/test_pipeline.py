@@ -140,6 +140,24 @@ def test_langid_udf_matches_sql_impl(spark, pages):
     assert df.filter(F.col("udf_lang") != F.col("sql_lang")).count() == 0
 
 
+def test_langid_udf_branch_keep_matches_oracle(pages, golden):
+    """The langid-UDF branch replaces rule_lang and gates keep on it;
+    its labels equal the SQL ones on this corpus, so keep and
+    fired_rules must equal the oracle's, written and under
+    filter(keep)."""
+    scored = score_pages(pages, PipelineConfig(langid_impl="udf"))
+    rows = scored.select("url", "keep", "fired_rules").collect()
+    assert len(rows) == len(golden)
+    for r in rows:
+        g = golden[r["url"]]
+        assert (r["keep"], list(r["fired_rules"])) == (
+            g["keep"],
+            g["fired_rules"],
+        ), r["url"]
+    kept = sum(1 for g in golden.values() if g["keep"])
+    assert scored.filter("keep").count() == kept
+
+
 def test_resume_is_idempotent(spark, pages, tmp_path_factory):
     full_dir = str(tmp_path_factory.mktemp("full"))
     resumed_dir = str(tmp_path_factory.mktemp("resumed"))
@@ -206,10 +224,11 @@ def test_rule_names_static_tuple_in_sync(spark):
     from data_quality_checker_spark.plans.rules import (
         RULE_NAMES,
         RuleConfig,
-        rule_exprs,
+        rule_flags,
     )
 
-    assert tuple(rule_exprs(RuleConfig()).keys()) == RULE_NAMES
+    flags = rule_flags(RuleConfig(), F.col("text"), F.col("_rule_stats"))
+    assert tuple(flags.keys()) == RULE_NAMES
 
 
 def test_host_metrics_salted_equals_direct(spark, pages, scored):

@@ -16,7 +16,9 @@ from data_quality_checker_spark.functions.wordlists import (
     TOXIC_WORDS,
 )
 from data_quality_checker_spark.plans.rules import (
-    lang_argmax_expr,
+    RuleConfig,
+    lang_argmax,
+    page_stats,
     word_alt_pattern,
 )
 
@@ -76,9 +78,9 @@ def test_trie_pattern_counts_match_flat_alternation(docs):
 
 
 def test_lang_argmax_matches_five_scan_form(docs):
-    """lang_argmax_expr (one union extraction + membership fold) must
-    label every row exactly like the five-regexp-scan argmax it
-    replaced."""
+    """The battery's language argmax (one union extraction folded into
+    page_stats' wsc counts) must label every row exactly like the
+    five-regexp-scan argmax it replaced."""
     lower = F.lower("text")
     scores = {
         lang: F.regexp_count(
@@ -96,7 +98,7 @@ def test_lang_argmax_matches_five_scan_form(docs):
         docs.filter("text is not null")
         .select(
             "doc_id",
-            lang_argmax_expr(lower).alias("opt"),
+            lang_argmax(page_stats(RuleConfig())["wsc"]).alias("opt"),
             ref.alias("ref"),
         )
         .collect()
@@ -179,61 +181,143 @@ def test_duplicate_clusters_prev_label_convergence(spark):
     release_cache(out)
 
 
-def test_keep_fired_expr_matches_flag_or(spark):
-    """The self-contained bound keep (rules.keep_fired_expr, used by
-    score_pages' filter path) must equal the flag-column OR for every
-    edge shape: NULL/empty/whitespace text, length gates, multi-lang,
-    unicode lowercasing that changes length, dup lines, toxicity."""
-    from pyspark.sql import functions as F
+_KEPT = (
+    "the quick brown fox jumps over the lazy dog and then the cat sat"
+    " on the mat while the bird sang in the tree"
+)
+EDGE_ROWS = [
+    None, "", "   ", "\t\n", "ab", "x" * 90000,
+    "İstanbul BİR İKİ word here today maybe",
+    "the cat and the dog sat on the mat with the hat",
+    "el gato y el perro es bueno para la casa y la vida",
+    "le chat et le chien est dans la maison aujourd'hui",
+    "zzz qqq ppp mmm nnn", "a a a a a a a a a a a a",
+    "line one\nline one\nline one\nline two",
+    "!!!! @@@@ #### $$$$ %%%%",
+    "  leading ws then the words of the doc here  ",
+    "the quick brown fox damn jumps over the lazy dog today",
+    "word " * 30000, "short words only here now then",
+    _KEPT, _KEPT + " toxic_slur_a",
+]
 
-    from data_quality_checker_spark.plans.rules import (
-        RuleConfig,
-        keep_fired_expr,
-    )
+
+def _assert_battery_matches_oracle(spark, texts, cfg):
+    """Every rule_* column, fired_rules and keep equal
+    plans/oracle.fired_rules row for row."""
+    from data_quality_checker_spark.plans import oracle as O
+    from data_quality_checker_spark.plans.rules import RULE_NAMES
     from data_quality_checker_spark.plans.verdict import (
+        STATS_COL,
         with_rule_flags,
         with_verdict,
     )
 
-    rows = [
-        (None,), ("",), ("   ",), ("\t\n",), ("ab",), ("x" * 90000,),
-        ("İstanbul BİR İKİ word here today maybe",),
-        ("the cat and the dog sat on the mat with the hat",),
-        ("el gato y el perro es bueno para la casa y la vida",),
-        ("le chat et le chien est dans la maison aujourd'hui",),
-        ("zzz qqq ppp mmm nnn",), ("a a a a a a a a a a a a",),
-        ("line one\nline one\nline one\nline two",),
-        ("!!!! @@@@ #### $$$$ %%%%",),
-        ("  leading ws then the words of the doc here  ",),
-        ("the quick brown fox damn jumps over the lazy dog today",),
-        ("word " * 30000,), ("short words only here now then",),
-    ]
-    df = spark.createDataFrame(rows, "text string").withColumn(
-        "doc_id", F.monotonically_increasing_id()
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
     )
+    scored = with_verdict(with_rule_flags(df, cfg), cfg)
+    assert STATS_COL not in scored.columns
+    got = scored.collect()
+    assert len(got) == len(texts)
+    for r in got:
+        want = O.fired_rules(texts[r["doc_id"]], cfg)
+        flags = [n for n in RULE_NAMES if r[f"rule_{n}"]]
+        assert (flags, list(r["fired_rules"]), r["keep"]) == (
+            want,
+            want,
+            not want,
+        ), (r["doc_id"], (texts[r["doc_id"]] or "")[:60])
+
+
+def test_battery_flags_match_oracle_edge_rows(spark):
+    """The one-struct battery pinned per flag, not just per keep, on
+    every edge shape: NULL/empty/whitespace text, length gates,
+    multi-lang, unicode lowercasing that changes length, dup lines,
+    toxicity, and a clean page that is kept."""
+    from data_quality_checker_spark.plans import oracle as O
+    from data_quality_checker_spark.plans.rules import RULE_NAMES
+
+    fired = [O.fired_rules(t, RuleConfig()) for t in EDGE_ROWS]
+    assert {n for f in fired for n in f} == set(RULE_NAMES)
+    assert [] in fired
+    _assert_battery_matches_oracle(spark, EDGE_ROWS, RuleConfig())
+
+
+def test_battery_custom_config_matches_oracle(spark):
+    """The fused-extraction membership map is cached per
+    (stopwords, toxic_words) — a CUSTOM RuleConfig must produce its
+    own map and still match the oracle flag for flag."""
+    cfg = RuleConfig(
+        stopwords=("lorem", "ipsum", "dolor"),
+        toxic_words=("badword", "awful"),
+        min_stopword_ratio=0.05,
+        allowed_langs=("en", "es"),
+    )
+    texts = [
+        "lorem ipsum dolor sit amet lorem ipsum here we go now",
+        "badword in the middle of the otherwise fine text here",
+        "no stop words at all in this particular document text",
+        "el gato y el perro es bueno para la casa y la vida",
+        None, "",
+    ] + EDGE_ROWS
+    _assert_battery_matches_oracle(spark, texts, cfg)
+
+
+def test_battery_builder_rebuilds_on_new_gateway(spark, monkeypatch):
+    """The cached battery Columns are keyed on the live py4j gateway:
+    a relaunched gateway gets freshly built Columns, never handles
+    from the torn-down one."""
+    from pyspark import SparkContext
+
+    from data_quality_checker_spark.plans import verdict as V
+
     cfg = RuleConfig()
-    a = with_verdict(with_rule_flags(df), cfg).select("doc_id", "keep")
-    b = df.select(
-        "doc_id", (~keep_fired_expr(cfg)).alias("keep")
+    first = V._battery(cfg, "text")
+    assert V._battery(cfg, "text") is first
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    rebuilt = V._battery(cfg, "text")
+    assert rebuilt is not first
+    assert V._battery(cfg, "text") is rebuilt
+    monkeypatch.undo()
+    assert V._battery(cfg, "text") is first
+
+
+_BATTERY_MARK = r"[^\p{L}\p{N}\s]"  # page_stats' symbol count
+
+
+@pytest.mark.parametrize("langid_impl", ["sql", "udf"])
+def test_one_battery_evaluation_per_row(spark, langid_impl):
+    """score_pages evaluates the stats struct once per row in both
+    consumer shapes: the written projection (rule_* columns and keep
+    share it), and filter(keep) alone, where it must come after the
+    three length gates so pages they drop never pay for it. The
+    langid-UDF branch overrides rule_lang and must keep both
+    properties."""
+    from data_quality_checker_spark.plans import synth
+    from data_quality_checker_spark.plans.pipeline import (
+        PipelineConfig,
+        score_pages,
     )
-    mism = (
-        a.alias("a")
-        .join(b.alias("b"), "doc_id")
-        .filter("a.keep <> b.keep")
-        .count()
+
+    scored = score_pages(
+        synth.pages_df(spark, 20, seed=3),
+        PipelineConfig(langid_impl=langid_impl),
     )
-    assert mism == 0
-    # and the self_contained_keep=True verdict path agrees too
-    c = with_verdict(
-        with_rule_flags(df), cfg, self_contained_keep=True
-    ).select("doc_id", F.col("keep").alias("keep_sc"))
-    mism2 = (
-        a.alias("a")
-        .join(c.alias("c"), "doc_id")
-        .filter("a.keep <> c.keep_sc")
-        .count()
-    )
-    assert mism2 == 0
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert plan(scored).count(_BATTERY_MARK) == 1
+    filtered = plan(scored.filter("keep").select("url"))
+    assert filtered.count(_BATTERY_MARK) == 1
+    (cond,) = [
+        ln
+        for ln in filtered.splitlines()
+        if "Filter" in ln and _BATTERY_MARK in ln
+    ]
+    at = cond.index(_BATTERY_MARK)
+    for gate in (r"RLIKE(text#", ") >= 80)", ") <= 20000)"):
+        assert -1 < cond.find(gate) < at, gate
 
 
 # ---------------------------------------------------------------------------
@@ -333,47 +417,3 @@ def test_rollback_skips_committed_legacy_prefix_batch(spark, tmp_path):
         assert os.path.exists(
             f"{root}/{table}/batch-2024-part-1-part-0"
         ), table
-
-
-def test_keep_fired_expr_custom_config(spark):
-    """The fused-extraction membership map is cached per
-    (stopwords, toxic_words) — a CUSTOM RuleConfig must produce its
-    own map and still match the flag-column OR exactly."""
-    from pyspark.sql import functions as F
-
-    from data_quality_checker_spark.plans.rules import (
-        RuleConfig,
-        keep_fired_expr,
-    )
-    from data_quality_checker_spark.plans.verdict import (
-        with_rule_flags,
-        with_verdict,
-    )
-
-    cfg = RuleConfig(
-        stopwords=("lorem", "ipsum", "dolor"),
-        toxic_words=("badword", "awful"),
-        min_stopword_ratio=0.05,
-        allowed_langs=("en", "es"),
-    )
-    rows = [
-        ("lorem ipsum dolor sit amet lorem ipsum here we go now",),
-        ("badword in the middle of the otherwise fine text here",),
-        ("no stop words at all in this particular document text",),
-        ("el gato y el perro es bueno para la casa y la vida",),
-        (None,), ("",),
-    ]
-    df = spark.createDataFrame(rows, "text string").withColumn(
-        "doc_id", F.monotonically_increasing_id()
-    )
-    a = with_verdict(with_rule_flags(df, cfg), cfg).select(
-        "doc_id", "keep"
-    )
-    b = df.select("doc_id", (~keep_fired_expr(cfg)).alias("keep"))
-    mism = (
-        a.alias("a")
-        .join(b.alias("b"), "doc_id")
-        .filter("a.keep <> b.keep")
-        .count()
-    )
-    assert mism == 0

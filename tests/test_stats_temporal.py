@@ -62,6 +62,37 @@ def test_psi_zero_for_identical_and_positive_for_shifted(spark, num_df):
     assert S.psi(num_df, shifted, "x") > 0.2
 
 
+def test_psi_one_side_empty_matches_sql_twin(spark, num_df):
+    """One side empty after the NULL filter used to divide by zero; psi
+    must return what the DuckDB twin (__spark_entry__.SQL_PSI's shape)
+    returns for the same input: the empty side at the eps floor."""
+    import duckdb
+
+    xs = [r["x"] for r in num_df.select("x").collect()]
+    nulls = spark.createDataFrame([(None,)] * 3, "x double")
+    con = duckdb.connect()
+    con.execute("create table base as select unnest(?) as value", [xs])
+    want = con.execute(
+        """
+        with b as (select min(value) lo, max(value) hi from base),
+        cb as (select 0 bk, 0 n where false),
+        bb as (select least(9, floor((value - lo) / ((hi - lo) / 10)))::int
+                      bk, count(*) n from base, b group by 1),
+        grid as (select unnest(generate_series(0, 9)) bk),
+        p as (select greatest(coalesce(cb.n, 0)::double
+                                / (select sum(n) from cb), 1e-4) pc,
+                     greatest(coalesce(bb.n, 0)::double
+                                / (select sum(n) from bb), 1e-4) pb
+              from grid left join cb on grid.bk = cb.bk
+                        left join bb on grid.bk = bb.bk)
+        select sum((pc - pb) * ln(pc / pb)) from p
+        """
+    ).fetchone()[0]
+    assert want > 0
+    assert S.psi(nulls, num_df, "x") == pytest.approx(want, rel=1e-9)
+    assert S.psi(num_df, nulls, "x") == pytest.approx(want, rel=1e-9)
+
+
 def test_mutual_information_and_chi2(spark):
     # perfectly dependent pair
     df = spark.createDataFrame(
